@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from pdftotext_spark.core.dispatch import extract_payload
 from pdftotext_spark.core.document import ExtractOptions
+from pdftotext_spark.sources.shipping import trim_import_caches
 
 # Output schema of the extraction stage. Keeps the transcript key
 # columns (pass-through) and appends extraction results + metrics.
@@ -82,6 +83,7 @@ def extract_batches(
     """
     import os
 
+    trim_import_caches()
     trace_dir = os.environ.get("SPARK_GRAFT_TRACE_DIR")
     trace_f = None
     if trace_dir:
@@ -175,8 +177,7 @@ def page_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """``mapInPandas`` body emitting one row per extracted page with
     its char-offset span in the joined text (X3/X6 support:
     ``Pages[]`` + ``PageLocations``, PdfToText.php:1097, 2035–2047)."""
-    from pdftotext_spark.core.dispatch import extract_payload
-
+    trim_import_caches()
     for pdf in batches:
         rows: dict[str, list] = {k.name: [] for k in PAGES_SCHEMA.fields}
         for conv_id, turn_idx, payload in zip(
@@ -199,6 +200,7 @@ def fragment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """``mapInPandas`` body emitting the exploded *fragments* table
     (FIXTURES.md §4) for layout/capture operators — one output row per
     positioned text fragment."""
+    trim_import_caches()
     opts = ExtractOptions(layout=True, want_fragments=True)
     for pdf in batches:
         rows: dict[str, list] = {

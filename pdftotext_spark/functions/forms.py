@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 
 from pdftotext_spark.core.dispatch import B64_SENTINEL
 from pdftotext_spark.core.forms import extract_form_data
-from pdftotext_spark.sources.shipping import ship_package
+from pdftotext_spark.sources.shipping import ship_package, trim_import_caches
 
 FORM_SCHEMA = T.StructType(
     [
@@ -39,6 +39,7 @@ def _payload_bytes(payload: str) -> bytes | None:
 
 def make_form_batches(template_xml: str | None):
     def form_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             rows: dict[str, list] = {
                 "conv_id": [], "turn_idx": [], "form_fields": [], "n_fields": []

@@ -50,7 +50,6 @@ _BLOCK_TAGS = frozenset(
     "blockquote pre figure figcaption br hr dl dt dd".split()
 )
 
-_DROP_SET = frozenset(_DROP_SUBTREE_TAGS)
 # raw-text elements cannot nest per the HTML spec — an apparent open
 # tag inside them (e.g. document.write('<script>…')) must not deepen
 # the subtree counter

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from pdftotext_spark.core.dispatch import extract_payload
 from pdftotext_spark.sources import pdfbuilder as pb
+from pdftotext_spark.sources.shipping import trim_import_caches
 
 _ROUNDTRIP_SCHEMA = T.StructType(
     [
@@ -62,6 +63,7 @@ def _make_roundtrip_batches(layout: bool):
     opts = ExtractOptions(layout=layout)
 
     def _roundtrip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             oks = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from pdftotext_spark.sources.shipping import ship_package
+from pdftotext_spark.sources.shipping import ship_package, trim_import_caches
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -96,6 +96,7 @@ def decode_audio_windows(
 
 def _frames_batches(every_n: int):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             rows: dict[str, list] = {k.name: [] for k in FRAME_SCHEMA.fields}
             for media_id, data in zip(pdf["media_id"], pdf["data"]):
@@ -121,6 +122,7 @@ def frame_sample(media: DataFrame, every_n: int = 1) -> DataFrame:
 
 
 def _audio_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    trim_import_caches()
     for pdf in batches:
         rows: dict[str, list] = {k.name: [] for k in AUDIO_WINDOW_SCHEMA.fields}
         for media_id, data in zip(pdf["media_id"], pdf["data"]):

@@ -73,8 +73,6 @@ from pdftotext_spark.operators.textstats import (
     PACK_BUDGET_TOKENS as _PACK_BUDGET,
 )
 
-MIX_SCALE = 1_000_000
-
 _NTOK_EXPR = "size(filter(split(lower(text), ' '), t -> t <> ''))"
 _NTOK_SQL = "len(list_filter(string_split(lower(text), ' '), t -> t <> ''))"
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdftotext_spark.sources.shipping import ship_package
+from pdftotext_spark.sources.shipping import ship_package, trim_import_caches
 
 IMAGE_SCHEMA = T.StructType(
     [
@@ -154,6 +154,7 @@ def carve_images_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     from pdftotext_spark.core.dispatch import extract_payload
     from pdftotext_spark.core.document import ExtractOptions
 
+    trim_import_caches()
     opts = ExtractOptions(want_images=True)
     for pdf in batches:
         rows: dict[str, list] = {k.name: [] for k in IMAGE_SCHEMA.fields}
@@ -206,6 +207,7 @@ def decode_image(data: bytes, strict: bool = False) -> tuple[int, int, list[floa
 
 
 def image_features_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    trim_import_caches()
     for pdf in batches:
         rows: dict[str, list] = {k.name: [] for k in FEATURE_SCHEMA.fields}
         for conv_id, turn_idx, image_idx, data in zip(

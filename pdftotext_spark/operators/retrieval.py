@@ -618,8 +618,11 @@ _BATCH_TERMS_SQL = ", ".join(
     f"'{t}'"
     for t in sorted({t for _, ts in BM25_BATCH_QUERIES for t in ts})
 )
+# per-query term dedup, as the Spark side's qmap
 _BATCH_VALUES_SQL = ", ".join(
-    f"('{qid}', '{t}')" for qid, ts in BM25_BATCH_QUERIES for t in ts
+    f"('{qid}', '{t}')"
+    for qid, ts in BM25_BATCH_QUERIES
+    for t in dict.fromkeys(ts)
 )
 
 BM25_BATCH_TOPK_SQL = f"""

@@ -23,6 +23,7 @@ from pdftotext_spark.operators.materialize import (
     materialize,
     materialize_lazy,
 )
+from pdftotext_spark.sources.shipping import ship_package, trim_import_caches
 
 TOP_K = 10
 # the synthetic embeddings are near-orthogonal, so 0.8 matched nothing
@@ -277,8 +278,6 @@ def cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`knn_graph_srp`, restricted within the label — then exact
     rescoring, keeping total work subquadratic in the bucket size
     (the 100 TB guard; see EXACT_BUCKET_CAP)."""
-    from pdftotext_spark.sources.shipping import ship_package
-
     ship_package(spark)
     # norms computed once per vector (N), not per pair (N²/buckets)
     emb = (
@@ -1124,6 +1123,7 @@ def _band_keys_pd(it, planes, n_bands, n_bits, extra_cols=()):
     import numpy as np
     import pandas as pd
 
+    trim_import_caches()
     P = np.array(planes, dtype=np.float64)  # planes × dim
     for pdf in it:
         if pdf.empty:
@@ -1168,6 +1168,7 @@ def _pair_cosine_pd(it):
     import numpy as np
     import pandas as pd
 
+    trim_import_caches()
     for pdf in it:
         if pdf.empty:
             continue
@@ -1226,8 +1227,6 @@ def knn_graph_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions to Arrow-batched numpy with sequential accumulation
     (bit-identical values — see :func:`_seq_accum_dot`); measured
     8.7 s → ~4 s at sf0.1 with the band set (and recall) unchanged."""
-    from pdftotext_spark.sources.shipping import ship_package
-
     ship_package(spark)
     emb = (
         _read(spark, sf_dir, "embeddings")
@@ -1702,8 +1701,6 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb_pairs, counts, threshold=SEMDEDUP_EPS
         )
     else:
-        from pdftotext_spark.sources.shipping import ship_package
-
         _warn_routed_low_eps("semdedup", SEMDEDUP_EPS)
         ship_package(spark)
         emb_pairs = emb_pairs.transform(materialize)

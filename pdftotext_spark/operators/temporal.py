@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdftotext_spark.sources.shipping import trim_import_caches
+
 ASOF_LEFT_TYPE = "click"
 ASOF_RIGHT_TYPE = "purchase"
 
@@ -29,6 +31,7 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def _asof_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    trim_import_caches()
     left = (
         pdf[pdf["event_type"] == ASOF_LEFT_TYPE]
         .sort_values(["ts", "event_id"])

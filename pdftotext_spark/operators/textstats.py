@@ -2615,13 +2615,6 @@ FROM ranked
 """
 
 
-# Temperature exponent for source mixing. alpha=0.5 means q_s is
-# proportional to sqrt(p_s): sqrt is correctly-rounded IEEE-754 in
-# both engines, so the unnormalized weights are bit-identical
-# cross-engine before the (integer-scaled, order-proof) normalization.
-MIX_TEMP_ALPHA = 0.5
-
-
 def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(Human-readable 6dp report; the integer-micro-unit twin that
     feeds the rebalance/pack/streaming apply family is

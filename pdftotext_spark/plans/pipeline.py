@@ -58,7 +58,9 @@ def session_confs() -> dict[str, str]:
       size so post-shuffle partitions land in the 100 MB–1 GB band
       (e.g. ~2–3x total executor cores as a floor) and let AQE
       coalescing shrink small stages; 32 is NOT a magic constant, it
-      is the local core count.
+      was the core count of the 32-thread host the BENCH_r0*.json
+      numbers were taken on (a 4-core host keeps it; AQE coalescing
+      trims the surplus partitions).
     - ``SPARK_GRAFT_MAX_PARTITION_BYTES`` (default 1m): extraction
       burns ~1 CPU-sec per scanned MB — far above scan cost — so
       splits sized to ~seconds-of-CPU keep every core fed; pure-scan

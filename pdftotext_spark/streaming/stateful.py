@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pdftotext_spark.sources.shipping import trim_import_caches
+
 STATE_SCHEMA = "turns LONG, chars LONG, failures LONG, max_turn LONG"
 
 OUTPUT_SCHEMA = T.StructType(
@@ -39,6 +41,7 @@ def _accumulate(
     batches: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
+    trim_import_caches()
     turns, chars, failures, max_turn = (
         state.get if state.exists else (0, 0, 0, -1)
     )
@@ -87,6 +90,7 @@ class _ConversationProcessor:
     job would use (RocksDB state store, per-variable schemas)."""
 
     def init(self, handle) -> None:
+        trim_import_caches()
         from pyspark.sql.types import (
             LongType,
             StructField,

@@ -2,6 +2,8 @@
 (broadcasts broadcast, filters push down, top-k avoids global sort).
 These guard against regressions that stay correct but stop scaling."""
 
+import re
+
 import pytest
 
 from pdftotext_spark.operators import dedup, relational, similarity
@@ -775,4 +777,17 @@ def test_perplexity_rank_window_is_tie_bounded(spark):
     ]
     assert rn_lines, "rank window missing"
     for ln in rn_lines:
-        assert "logloss_bits" in ln.split("windowspecdefinition", 1)[1]
+        # windowspecdefinition(<partition keys>, <order keys> ASC|DESC
+        # NULLS ..., specifiedwindowframe(...)): keep the keys before
+        # the first ordering or frame item
+        spec = ln.split("windowspecdefinition(", 1)[1]
+        keys = []
+        for item in spec.split(", "):
+            if re.search(r" (ASC|DESC) NULLS (FIRST|LAST)$", item) or (
+                item.startswith("specifiedwindowframe")
+            ):
+                break
+            keys.append(item.split("#", 1)[0])
+        assert "logloss_bits" in keys, (
+            f"rank window must partition by logloss_bits, got keys {keys}: {ln}"
+        )

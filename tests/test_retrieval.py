@@ -355,7 +355,8 @@ def test_bm25_batch_matches_single_query_paths(spark):
     postings, same k) — the one-pass evaluation changes the scan
     count, never the math. A query whose terms are all corpus-absent
     emits no rows (candidate semantics); a term shared by two queries
-    scores identically in both."""
+    scores identically in both; a term repeated within one query counts
+    once, as in the single-query path's ``isin``."""
     texts = [
         "spark window join spark window",
         "join join window stream",
@@ -368,12 +369,13 @@ def test_bm25_batch_matches_single_query_paths(spark):
         ("qa", ("spark", "join")),
         ("qb", ("join", "window")),   # 'join' shared with qa
         ("qc", ("absentterm",)),      # no postings at all
+        ("qd", ("window", "join", "window")),  # duplicated term
     )
     df = retrieval.bm25_batch_topk_for(_frame(spark, texts), queries=queries, k=3)
     rows = df.collect()
     assert not [r for r in rows if r.query_id == "qc"]
     postings, stats = retrieval.bm25_index_for(_frame(spark, texts))
-    for qid, terms in queries[:2]:
+    for qid, terms in (q for q in queries if q[0] != "qc"):
         single = [
             (r.doc_id, r.n_terms, r.bm25_micro)
             for r in retrieval.bm25_topk_indexed_for(
@@ -387,6 +389,6 @@ def test_bm25_batch_matches_single_query_paths(spark):
         ]
         assert got == single and 1 <= len(got) <= 3
     # ranks are contiguous from 1 within each query
-    for qid in ("qa", "qb"):
+    for qid in ("qa", "qb", "qd"):
         ranks = sorted(r.q_rank for r in rows if r.query_id == qid)
         assert ranks == list(range(1, len(ranks) + 1))

@@ -92,6 +92,9 @@ def test_ascii_parity_with_reference_fm_tables():
             assert int(mine[code]) == fm[code], (name, code, mine[code], fm[code])
 
 
+@pytest.mark.skipif(
+    not os.path.isdir(REF_FM_DIR), reason="reference FontMetrics not present"
+)
 def test_zapfdingbats_parity_with_reference_fm_table():
     """Every shipped ZapfDingbats code (the AFM-encoded ornament set,
     r5, plus the 14 PDF-spec supplemental ornaments at 128–141, r6)
